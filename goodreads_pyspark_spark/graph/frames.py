@@ -184,13 +184,6 @@ def build_ratings_graph(tables: GoodreadsTables) -> PropertyGraph:
     return PropertyGraph(vertices, edges)
 
 
-def plot_edge_sample(graph: PropertyGraph, n: int = 1000) -> list:
-    """Driver-side edge sample feeding visualization (G9; reference:
-    goodreads.py:506-541 takes 1000 edges into NetworkX). The engine's
-    role ends at ``take(n)`` — rendering is a driver concern."""
-    return graph.edges.select("src", "dst").take(n)
-
-
 def triangle_count(edges: DataFrame, pre_deduped: bool = False) -> DataFrame:
     """Exact global triangle count via degree-ordered (forward) counting.
 

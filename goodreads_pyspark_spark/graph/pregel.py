@@ -20,6 +20,8 @@ GraphX's resetProb form), LPA (Raghavan et al.), BFS frontier expansion.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -169,8 +171,23 @@ def pagerank_scaled(
     return ranks.select("id", F.col("pr").alias("pr_scaled"))
 
 
-def ppr_base(graph: PropertyGraph, seed_expr: str) -> dict:
-    """Cache the query-independent PPR inputs ONCE for several runs.
+@dataclass(frozen=True)
+class PprBase:
+    """Cached PPR inputs for one graph and one seed set (see :func:`ppr_base`)."""
+
+    seed_expr: str
+    edges: DataFrame
+    deg: DataFrame
+    seeds: DataFrame
+
+    def unpersist(self) -> None:
+        for f in (self.edges, self.deg, self.seeds):
+            f.unpersist()
+
+
+def ppr_base(graph: PropertyGraph, seed_expr: str) -> PprBase:
+    """Cache the PPR inputs (edges, out-degrees and the ``seed_expr``
+    seed flags) ONCE for several runs over the same graph and seed set.
 
     ADVICE r12 (medium): when two concurrent PPR runs each built and
     cached their own ``edges``/``deg``/``seeds``, Spark's CacheManager
@@ -187,7 +204,7 @@ def ppr_base(graph: PropertyGraph, seed_expr: str) -> dict:
     seeds = graph.vertices.select(
         "id", F.when(F.expr(seed_expr), 1).otherwise(0).alias("is_seed")
     ).cache()
-    return {"edges": edges, "deg": deg, "seeds": seeds}
+    return PprBase(seed_expr, edges, deg, seeds)
 
 
 def personalized_pagerank_scaled(
@@ -199,7 +216,7 @@ def personalized_pagerank_scaled(
     reset_den: int = 100,
     checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
-    base: dict | None = None,
+    base: PprBase | None = None,
 ) -> DataFrame:
     """Topic-sensitive (personalized) PageRank in the same fixed-point
     integer arithmetic as :func:`pagerank_scaled`.
@@ -215,14 +232,20 @@ def personalized_pagerank_scaled(
     Overflow headroom is |seeds|·scale rather than |V|·scale, so the
     default 1e12 scale supports ~10^5 seeds at any graph size.
 
-    ``base`` — a :func:`ppr_base` dict — lets an orchestrator running
+    ``base`` — a :func:`ppr_base` result — lets an orchestrator running
     several PPRs over the same graph share ONE set of cached inputs;
-    the caller then owns their lifetime (see ppr_base docstring).
+    the caller then owns their lifetime (see ppr_base docstring). A base
+    built for a different ``seed_expr`` raises ``ValueError``.
     """
     own_base = base is None
     if own_base:
         base = ppr_base(graph, seed_expr)
-    edges, deg, seeds = base["edges"], base["deg"], base["seeds"]
+    elif base.seed_expr != seed_expr:
+        raise ValueError(
+            f"ppr base was built for seed_expr {base.seed_expr!r}, "
+            f"not {seed_expr!r}"
+        )
+    edges, deg, seeds = base.edges, base.deg, base.seeds
     reset_scaled = (reset_num * scale) // reset_den
     keep_num = reset_den - reset_num
     ranks = seeds.select(
@@ -250,9 +273,7 @@ def personalized_pagerank_scaled(
             ranks = _truncate(ranks, checkpoint_dir=checkpoint_dir)
 
     if own_base:
-        edges.unpersist()
-        deg.unpersist()
-        seeds.unpersist()
+        base.unpersist()
     return ranks.select("id", F.col("pr").alias("ppr_scaled"))
 
 

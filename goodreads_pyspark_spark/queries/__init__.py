@@ -21,7 +21,9 @@ Oracle-parity rules (hard-won; keep them):
 
 from __future__ import annotations
 
+import functools
 import re
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -143,21 +145,54 @@ GATE_WINDOW: frozenset[str] = frozenset(
 # (localCheckpoint-backed) deliberately survive the bench harness's
 # clearCache, so per-query bench timings measure MARGINAL cost given a
 # warm kernel — correct, but uninterpretable without the build cost.
-# Each memo registers a builder here; bench.py forces every kernel up
+# Each memoized accessor registers here; bench.py forces every kernel up
 # front, times it as its own line, and records this consumer map in
 # BENCH_DETAIL so the amortization is explicit. Registration order is
-# dependency order (e.g. neardup_cc consumes jac05_pairs), so builds
-# are timed against warm upstream kernels, never double-counted.
+# definition order, which is dependency order (neardup_cc consumes
+# jac05_pairs, d68_standing_index consumes ensemble_sig_sizes), so
+# builds are timed against warm upstream kernels, never double-counted.
 SHARED_KERNELS: dict[str, dict] = {}
 
 
 def shared_kernel(name: str, consumers: tuple[str, ...]):
-    """Decorator registering a shared-kernel builder ``(spark, sf_dir)
-    -> None`` with the bench-facing list of amortizing query names."""
+    """Memoize a kernel accessor ``(spark, sf_dir) -> result`` once per
+    (session, sf_dir) and register it in :data:`SHARED_KERNELS` with the
+    bench-facing list of amortizing query names.
 
-    def deco(fn):
-        SHARED_KERNELS[name] = {"build": fn, "consumers": list(consumers)}
-        return fn
+    Kernels are deterministic, so one build per ``(applicationId,
+    sf_dir)`` is result-identical to rebuilding per consumer. The
+    accessor body materializes its result with ``localCheckpoint()``,
+    not ``cache()``: the result is output-sized, and RDD checkpoint
+    blocks survive ``spark.catalog.clearCache()``, which the bench
+    harness runs between queries and which would otherwise silently
+    evict the kernel and re-run it per consumer. (On a real cluster this
+    would be a reliable checkpoint — localCheckpoint dies with an
+    executor; single-JVM local mode has no such loss.)
+
+    A miss evicts entries of stopped sessions (at most a handful of
+    keys ever live). Lookup and build hold a lock of this kernel only,
+    so concurrent callers (``run_concurrent`` thunks) build once; builds
+    nest across kernels (neardup_cc calls jac05_pairs), which a single
+    shared lock would deadlock.
+    """
+
+    def deco(build):
+        memo: dict[tuple[str, str], object] = {}
+        lock = threading.Lock()
+
+        @functools.wraps(build)
+        def accessor(spark: SparkSession, sf_dir: str):
+            app = spark.sparkContext.applicationId
+            key = (app, sf_dir)
+            with lock:
+                if key not in memo:
+                    for k in [k for k in memo if k[0] != app]:
+                        del memo[k]
+                    memo[key] = build(spark, sf_dir)
+                return memo[key]
+
+        SHARED_KERNELS[name] = {"build": accessor, "consumers": list(consumers)}
+        return accessor
 
     return deco
 

@@ -1338,7 +1338,8 @@ def e23_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_E21_TAU).cast("double").alias("tau"),
             "n_exact",
             "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall"),
+            # no exact pairs (empty input): NULL recall, like the oracle
+            F.try_divide(F.col("n_hit").cast("double"), F.col("n_exact")).alias("recall"),
         )
     )
 

@@ -19,26 +19,22 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
-#: Measured tuning posture (r12 A/B: SCALING.md addendum 12 / commit
-#: 90aa1f3; r13 re-validation: OPTIMIZATION_r13.md).
-#: canChangeCachedPlanOutputPartitioning was GLOBAL=true in r12 — it
-#: extends AQE partition coalescing to plans that materialize a cache(),
-#: which is what iterative graph loops want (per-round cached state
-#: coalesces to byte-sized partitions; r12/r13 A/B: g14 1.39-1.47x,
-#: g05 1.23x faster with it). But the r13 final-tree A/B showed the
-#: same flag SERIALIZES the e33-e35 IVFPQ family (their small cached
-#: explode frames coalesce to ~1 partition and every downstream window
-#: runs single-task: e33 2.2x, e34 1.5x, e35 2.8x slower). The flag is
-#: therefore no longer global: :func:`scoped_conf` sets it around the
-#: iterative-loop materializations in graph/frames._truncate — the one
-#: surface where it measurably wins. The candidate flags
-#: coalescePartitions.parallelismFirst=false + 16m advisory were
-#: REJECTED on measurement in r12: compute-dense, byte-light stages
-#: (tokenize/shingle, LPA rounds) lost core coverage — g03 1.78x,
+#: The cached-plan AQE-coalescing flag (r12 A/B: SCALING.md addendum 12 /
+#: commit 90aa1f3; r13 re-validation: OPTIMIZATION_r13.md). It extends
+#: AQE partition coalescing to plans that materialize a cache(), which
+#: is what iterative graph loops want (per-round cached state coalesces
+#: to byte-sized partitions; r12/r13 A/B: g14 1.39-1.47x, g05 1.23x
+#: faster with it). Set GLOBALLY (r12) it SERIALIZES the e33-e35 IVFPQ
+#: family (their small cached explode frames coalesce to ~1 partition
+#: and every downstream window runs single-task: e33 2.2x, e34 1.5x,
+#: e35 2.8x slower). So it is never set at session build: callers where
+#: it measurably wins opt in through
+#: ``graph.frames.coalesce_cached_state``, which scopes it with
+#: :func:`cached_plan_coalescing`. The session factory sets no other
+#: tuning flag: coalescePartitions.parallelismFirst=false + 16m advisory
+#: were REJECTED on measurement in r12 — compute-dense, byte-light
+#: stages (tokenize/shingle, LPA rounds) lost core coverage: g03 1.78x,
 #: d54 1.34x, d65 1.18x.
-_TUNED_CONFS: dict[str, str] = {}
-
-#: The cached-plan AQE-coalescing flag, scoped (see comment above).
 CACHED_PLAN_AQE_FLAG = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
@@ -71,6 +67,14 @@ def _env_conf_overrides() -> list[tuple[str, str]]:
     return out
 
 
+def _default_driver_mem() -> str:
+    """Half of host memory, at most 32g. A heap ceiling above the host's
+    memory lets the JVM grow its heap until the kernel's OOM killer ends
+    it (seen on a 15 GB host: the 32g-capped test JVM reached 15 GB RSS)."""
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(32, host_gb // 2))}g"
+
+
 def get_spark(app_name: str = "goodreads_pyspark_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -95,17 +99,12 @@ def get_spark(app_name: str = "goodreads_pyspark_spark", cpus: int | None = None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )
-    # Measured tuning knobs (optimization guide §2.2/§9), each overridable
-    # via SPARK_GRAFT_CONF="k=v;k=v" so cluster deployments can re-tune
-    # without code edits. The current set is one boolean AQE-scope flag —
-    # behavioral, not sized to local[32]; byte-sized candidates
-    # (advisoryPartitionSizeInBytes et al.) were A/B'd and rejected on
-    # measurement (see _TUNED_CONFS comment above).
-    for k, v in _TUNED_CONFS.items():
-        builder = builder.config(k, v)
+    # SPARK_GRAFT_CONF="k=v;k=v" lets cluster deployments re-tune
+    # without code edits (byte-sized candidates were A/B'd and rejected
+    # on measurement — see the CACHED_PLAN_AQE_FLAG comment).
     for k, v in _env_conf_overrides():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -155,10 +154,10 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
 
 
 def cached_plan_coalescing(spark: SparkSession):
-    """Scope the cached-plan AQE-coalescing flag ON (see _TUNED_CONFS
-    comment: global=true serializes the IVFPQ family; the win lives in
-    iterative-loop state materialization, so only that surface —
-    graph/frames._truncate — opts in)."""
+    """Scope the cached-plan AQE-coalescing flag ON (see the
+    CACHED_PLAN_AQE_FLAG comment: global=true serializes the IVFPQ
+    family, so only measured callers opt in, through
+    ``graph.frames.coalesce_cached_state``)."""
     return scoped_conf(spark, CACHED_PLAN_AQE_FLAG, "true")
 
 

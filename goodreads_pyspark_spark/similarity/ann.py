@@ -160,6 +160,9 @@ def _screen_pairs_numpy(
             "corpus first (similarity.ann.sign_lsh_buckets, then screen "
             "per bucket) instead of raising the cap."
         )
+    if not rows:
+        # both sides are `df`: no rows, no pairs (and np.array([]) is 1-D)
+        return df.sparkSession.createDataFrame([], "id_a long, id_b long")
     ids_b = np.array([r[0] for r in rows], dtype=np.int64)
     m = np.array([r[1] for r in rows], dtype=np.float64)
     nb = np.sqrt((m * m).sum(axis=1))

@@ -31,12 +31,6 @@ def write_parquet_table(
     writer.saveAsTable(name)
 
 
-def register_temp_views(tables: dict[str, DataFrame]) -> None:
-    """Register DataFrames as temp views — the SQL facade's entry point."""
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-
-
 def compact_parquet(
     df: DataFrame,
     path: str,

@@ -20,6 +20,12 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def sf_smoke():
+    """The sf0.001 testdata directory."""
+    return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
 def goodreads_paths(tmp_path_factory):
     from tests.fixtures_goodreads import generate
 

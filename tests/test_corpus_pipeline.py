@@ -78,6 +78,29 @@ def test_cosine_screen_size_cap_enforced(spark):
         ).collect()
 
 
+def test_cosine_screen_empty_input_yields_no_pairs(spark):
+    """An empty comparison side screens to an empty (id_a, id_b) frame,
+    not a numpy AxisError on the 1-D empty matrix."""
+    from goodreads_pyspark_spark.similarity.ann import _screen_pairs_numpy
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(0)
+    out = _screen_pairs_numpy(emb, 0.5, 1e-6, "vec_id", "embedding")
+    assert out.columns == ["id_a", "id_b"]
+    assert out.collect() == []
+
+
+def test_semdedup_recall_on_empty_embeddings(spark, tmp_path):
+    """e23 over an empty embeddings table: zero exact pairs give a NULL
+    recall (the oracle's 0/0), not an ANSI divide-by-zero."""
+    from goodreads_pyspark_spark.queries import get_query
+
+    spark.read.parquet(f"{SF}/embeddings.parquet").limit(0).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    (row,) = get_query("e23_semdedup_recall").spark_fn(spark, str(tmp_path)).collect()
+    assert (row["n_exact"], row["n_hit"], row["recall"]) == (0, 0, None)
+
+
 def test_ivf_full_probe_equals_brute_force(spark):
     """nprobe == n_centroids degrades IVF to exhaustive search — results
     must equal the brute-force baseline exactly."""
@@ -548,59 +571,3 @@ def test_substring_dedup_matches_pure_python_reference(spark):
         for r in out
     }
     assert got == expect
-
-
-def test_neardup_kernel_memo_survives_clear_cache(spark):
-    """d06/c02/c04 share a session-memoized pairs+CC kernel. The memo is
-    localCheckpoint-backed precisely so the bench harness's per-query
-    spark.catalog.clearCache() cannot evict it — this pins that choice:
-    after a clearCache, the memoized frame must still return the same
-    rows WITHOUT recomputing from raw text (its plan is a checkpoint
-    scan, not the inverted-index join)."""
-    from goodreads_pyspark_spark.queries.documents import (
-        _JAC05_MEMO,
-        _jac05_pairs,
-        _neardup_cc,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    first = _jac05_pairs(spark, sf)
-    before = sorted(map(tuple, first.collect()))
-    cc_before = sorted(map(tuple, _neardup_cc(spark, sf).collect()))
-    spark.catalog.clearCache()
-    again = _jac05_pairs(spark, sf)
-    assert again is first, "memo must return the same frame per (app, sf)"
-    assert sorted(map(tuple, again.collect())) == before
-    assert sorted(map(tuple, _neardup_cc(spark, sf).collect())) == cc_before
-    # checkpoint-backed: the plan bottoms out in an RDD scan, not a parquet
-    # scan + join over raw text
-    plan = again._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan
-    key = (spark.sparkContext.applicationId, sf)
-    assert key in _JAC05_MEMO
-
-
-def test_stage_and_minhash_memos_survive_clear_cache(spark):
-    """Same pin as the jac05 memo for the other two shared kernels: the
-    c01/c03/c06 stage id-frames and the d07/d23/d34 signature table must
-    return the identical (checkpoint-backed) frames after a clearCache,
-    with unchanged contents."""
-    from goodreads_pyspark_spark.queries.documents import (
-        _c_pipeline_stages,
-        _minhash_sigs8,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    stages = _c_pipeline_stages(spark, sf)
-    sigs = _minhash_sigs8(spark, sf)
-    cleaned_before = sorted(r[0] for r in stages["cleaned"].collect())
-    sig_count = sigs.count()
-    spark.catalog.clearCache()
-    stages2 = _c_pipeline_stages(spark, sf)
-    assert stages2["cleaned"] is stages["cleaned"]
-    assert _minhash_sigs8(spark, sf) is sigs
-    assert sorted(r[0] for r in stages2["cleaned"].collect()) == cleaned_before
-    assert sigs.count() == sig_count
-    for frame in stages2.values():
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "Scan ExistingRDD" in plan

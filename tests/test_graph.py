@@ -306,6 +306,28 @@ def test_personalized_pagerank_hand_computed_path(spark):
     assert out == {1: 15, 2: 12, 3: 72, 4: 0}
 
 
+def test_personalized_pagerank_rejects_base_of_other_seeds(spark):
+    """A shared ppr_base carries its seed set: a run over a different
+    seed_expr must refuse it instead of silently using the base's seeds,
+    and a run over the same seed_expr matches the unshared run."""
+    from goodreads_pyspark_spark.graph.pregel import (
+        personalized_pagerank_scaled,
+        ppr_base,
+    )
+
+    v = spark.createDataFrame([(1,), (2,), (3,), (4,)], ["id"])
+    e = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
+    g = PropertyGraph(v, e)
+    base = ppr_base(g, "id = 1")
+    try:
+        with pytest.raises(ValueError, match="seed_expr"):
+            personalized_pagerank_scaled(g, "id = 2", n_iter=2, scale=100, base=base)
+        shared = personalized_pagerank_scaled(g, "id = 1", n_iter=2, scale=100, base=base)
+        assert sorted(map(tuple, shared.collect())) == [(1, 15), (2, 12), (3, 72), (4, 0)]
+    finally:
+        base.unpersist()
+
+
 def test_clustering_coefficients_known_graph(spark):
     """Triangle 1-2-3 plus pendant 4 attached to 3: cc(1)=cc(2)=1,
     cc(3)=1/3 (one triangle over C(3,2) possible), 4 excluded (deg 1)."""
@@ -488,22 +510,3 @@ def test_hits_scaled_rescale_survives_large_mass(spark):
     }
     # all mass lands on the single sink: auth = (n*scale * scale) div (n*scale)
     assert out[100] == scale
-
-
-def test_copart_pair_memo_survives_clear_cache(spark):
-    """g07/g08/g11 share the session-memoized distinct co-occurrence
-    pair table (the _jac05_pairs discipline): after a clearCache the
-    memo must return the identical checkpoint-backed frame with
-    unchanged contents, and the three consumers must agree with it."""
-    from goodreads_pyspark_spark.queries.graph import _COPART_MEMO, _copart_pairs
-
-    sf = "/root/testdata/sf0.001"
-    first = _copart_pairs(spark, sf)
-    before = sorted(map(tuple, first.collect()))
-    spark.catalog.clearCache()
-    again = _copart_pairs(spark, sf)
-    assert again is first, "memo must return the same frame per (app, sf)"
-    assert sorted(map(tuple, again.collect())) == before
-    plan = again._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan
-    assert (spark.sparkContext.applicationId, sf) in _COPART_MEMO
